@@ -159,8 +159,12 @@ def _dispatch(spark, args: list[str]) -> int:
         delete_input = len(rest) >= 5 and rest[4] == "1"
         part = rest[5] if len(rest) == 6 else "hash"
         kv = store.read(prefix)
+        # kv is a parquet scan: re-reading it to sample range
+        # boundaries is deterministic and cheap, and a cache here
+        # would outlive the job (nothing in a CLI session frees it)
         out = MapleJuice(spark).juice_exe(
-            kv, exe, num_tasks=int(n), partition=part)
+            kv, exe, num_tasks=int(n), partition=part,
+            cache_range_input=False)
         store.append(out, dest)
         if delete_input:
             store.delete(prefix)

@@ -19,10 +19,16 @@ physical operators instead of files + RPC:
   maple exe over a clip             mapInPandas (Arrow batches)
   prefix_<key> intermediate files   the shuffle (no files, no per-key
                                     metadata explosion at 100 TB)
-  hash shuffle                      groupBy(key) hash exchange
-  range shuffle                     repartitionByRange + in-partition
-                                    grouping (equal keys co-located)
-  juice exe per key                 applyInPandas per group
+  hash shuffle                      juice: groupBy(key) hash exchange;
+                                    juice_exe: repartition(N, key)
+  range shuffle                     repartitionByRange(N, key) +
+                                    in-partition grouping (equal keys
+                                    co-located)
+  juice fn per key                  applyInPandas per group (hash)
+  juice exe per key                 one per-partition key runner (both
+                                    shuffles): sort the partition by
+                                    key, pipe each key's contiguous
+                                    slice through its own exe run
 
 User functions are Arrow-batched pandas callables (10-100x over
 row-at-a-time UDFs); a legacy line-oriented adapter wraps any
@@ -31,10 +37,12 @@ old stdin/stdout-style job in one `wrap_line_job` call.
 
 from __future__ import annotations
 
+import itertools
 import subprocess
 import threading
 from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -232,7 +240,10 @@ class MapleJuice:
         """Reduce phase: apply ``reduce_fn(key, group_df)`` per key.
 
         partition="hash"  -> Catalyst hash exchange (groupBy), the
-                             default and fastest path.
+                             default and fastest path. AQE sizes it
+                             by bytes, which suits a reduce_fn whose
+                             per-key cost is small (juice_exe, which
+                             spawns a process per key, binds N).
         partition="range" -> repartitionByRange on the key (sampled
                              contiguous key ranges, the reference's
                              sorted-deal semantics, Shuffle:688) then
@@ -338,51 +349,47 @@ class MapleJuice:
         lines parse back into KV rows (juice output is appended to
         dest as `key value` lines, CreatAppendSdfsReduceFile).
 
-        hash  -> Catalyst hash exchange (groupBy), one process per key
-                 group at its reducer. num_tasks is advisory here, as
-                 in juice(): the exchange is sized by
-                 spark.sql.shuffle.partitions + AQE, the right knob at
-                 scale (parallelism caps at #keys either way since the
-                 reference contract is one exe run per key).
-        range -> repartitionByRange(num_tasks) + in-partition grouping
-                 (the reference's sorted Shuffle:688), still one
-                 process per key but keys contiguous per task."""
+        Keys are dealt to exactly ``num_tasks`` (default
+        spark.sql.shuffle.partitions) reducer tasks, like the
+        reference's N juice workers: hash -> repartition(N, key) (FNV
+        Hash:773), range -> repartitionByRange(N, key) (sorted
+        Shuffle:688). N is binding, unlike juice()'s groupBy: AQE
+        sizes an exchange by bytes, but an exe juice costs one process
+        spawn per key, so a few-MB kv coalesced into one task would
+        run every key's exe serially on one core.
+
+        cache_range_input: as in juice(); pass False when kv is a
+        cheap deterministic scan (re-reading it to sample the range
+        boundaries costs less than a cache nobody unpersists)."""
         if partition not in ("hash", "range"):
             raise ValueError("partition must be 'hash' or 'range'")
-
-        def key_lines(pdf: pd.DataFrame) -> list[str]:
-            # vectorized `key value` line build (C string kernel)
-            return (pdf[key_col].astype("string") + " "
-                    + pdf["value"].astype("string")).tolist()
-
+        n = int(num_tasks or kv.sparkSession.conf.get(
+            "spark.sql.shuffle.partitions"))
         if partition == "hash":
-            def apply(pdf: pd.DataFrame) -> pd.DataFrame:
-                chunks = list(_parse_kv(_pipe_lines(cmd, key_lines(pdf))))
-                if not chunks:
-                    return pd.DataFrame({"key": [], "value": []})
-                return pd.concat(chunks, ignore_index=True)
-
-            return kv.groupBy(key_col).applyInPandas(
-                apply, schema=KV_SCHEMA)
-
-        n = num_tasks or kv.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions")
-        # see juice(): cache so the range-boundary sampling job doesn't
-        # re-run the upstream (often an exe maple stage) a second time
-        if cache_range_input:
-            kv = kv.persist(StorageLevel.MEMORY_AND_DISK)
-            self._cached_kv.append(kv)
-        ranged = kv.repartitionByRange(int(n), F.col(key_col))
+            dealt = kv.repartition(n, F.col(key_col))
+        else:
+            if cache_range_input:
+                kv = kv.persist(StorageLevel.MEMORY_AND_DISK)
+                self._cached_kv.append(kv)
+            dealt = kv.repartitionByRange(n, F.col(key_col))
 
         def run_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             parts = [b for b in batches if len(b)]
             if not parts:
                 return
             whole = pd.concat(parts, ignore_index=True)
-            for _key, grp in whole.groupby(key_col, sort=True):
-                yield from _parse_kv(_pipe_lines(cmd, key_lines(grp)))
+            # stable sort on factorized key codes, then every `key
+            # value` line of the partition in one vectorized concat
+            codes, _ = pd.factorize(whole[key_col], sort=True)
+            order = np.argsort(codes, kind="stable")
+            lines = (whole[key_col].astype("string") + " "
+                     + whole["value"].astype("string")).to_numpy()[order]
+            cuts = np.flatnonzero(np.diff(codes[order])) + 1
+            # one exe per contiguous key slice, all stdout one stream
+            yield from _parse_kv(itertools.chain.from_iterable(
+                _pipe_lines(cmd, grp) for grp in np.split(lines, cuts)))
 
-        return ranged.mapInPandas(run_part, schema=KV_SCHEMA)
+        return dealt.mapInPandas(run_part, schema=KV_SCHEMA)
 
     # -------------------------------------------------- one-shot pipeline
     def run(

@@ -57,6 +57,32 @@ def test_maple_juice_wordcount_via_cli(spark, store_root, tmp_path):
     assert "wc_mid" not in store.store()
 
 
+def test_cli_range_juice_leaves_no_persisted_rdd(spark, store_root,
+                                                tmp_path):
+    """The CLI's kv is a parquet scan, so a range juice samples its
+    boundaries from the file instead of caching it: no persisted RDD
+    outlives the job."""
+    src = tmp_path / "lines.txt"
+    src.write_text("b a c\nc a\na\n")
+    run_command(spark, ["put", str(src), "rin"])
+    run_command(spark, [
+        "maple", "awk '{for (i = 1; i <= NF; i++) print $i, 1}'",
+        "2", "r_mid", "rin",
+    ])
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
+    before = persistent().size()
+    assert run_command(spark, [
+        "juice", "awk '{s += $2} END {print $1, s}'",
+        "2", "r_mid", "r_out", "1", "range",
+    ]) == 0
+    assert persistent().size() == before
+    from distributed_system_mapreduce_spark.sources.filestore import FileStore
+
+    got = {r["key"]: int(r["value"])
+           for r in FileStore(spark, str(store_root)).read("r_out").collect()}
+    assert got == {"a": 3, "b": 1, "c": 2}
+
+
 def test_query_verb_and_delegated_and_help(spark, store_root, capsys):
     from tests.conftest import SF_DIR
 

@@ -88,6 +88,37 @@ def test_exe_awk_maple_range_juice(spark):
     assert got == _as_dict(wordcount(spark, SF_DIR))
 
 
+@pytest.mark.parametrize("partition", ["hash", "range"])
+def test_exe_juice_runs_num_tasks_reducers(spark, partition):
+    """juice_exe deals keys to exactly num_tasks reducer tasks (the
+    reference's N juice workers), even on a kv so small that AQE would
+    coalesce a byte-sized exchange into one task."""
+    mj = MapleJuice(spark)
+    kv = spark.createDataFrame(
+        [(f"k{i:02d}", "1") for i in range(40)], "key string, value string")
+    out = mj.juice_exe(kv, "cat", num_tasks=3, partition=partition)
+    assert out.rdd.getNumPartitions() == 3
+    mj.unpersist_cached()
+
+
+@pytest.mark.parametrize("partition", ["hash", "range"])
+def test_exe_juice_one_process_per_key_under_skew(spark, partition):
+    """Lines are built and parsed per partition, but each exe process
+    must still see exactly one key's lines: an exe printing its line
+    count returns each key's exact size, over keys of skewed sizes
+    sharing 3 reducers."""
+    sizes = {f"k{i}": 3 ** i for i in range(8)}  # 1 .. 2187 lines
+    kv = spark.createDataFrame(
+        [(k, str(j)) for k, m in sizes.items() for j in range(m)],
+        "key string, value string")
+    mj = MapleJuice(spark)
+    out = mj.juice_exe(kv, "awk 'END {print $1, NR}'", num_tasks=3,
+                       partition=partition)
+    got = {r["key"]: int(r["value"]) for r in out.collect()}
+    mj.unpersist_cached()
+    assert got == sizes
+
+
 def test_exe_two_round_vote_pipeline(spark):
     """The reference's flagship election (command_backup: maple_vote ->
     juice_vote -> maple_vote_two -> juice_vote_two) with ALL FOUR

@@ -18,7 +18,8 @@ We time:
                     schedules the processes)
 
 plus the two-round election with the reference's four vote binaries.
-Writes BASELINE_COMPARE.json. Usage:
+Writes BASELINE_COMPARE.json; when the reference binaries are absent it
+prints which ones are missing and leaves that file as it is. Usage:
 
     python tools/baseline_compare.py [sf_dir]
 """
@@ -90,6 +91,13 @@ def _ref_mapreduce(maple: str, juice: str, in_lines: list[str],
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     n_clips = N_CLIPS or os.cpu_count() or 8
+    missing = [p for p in (REF_WC_MAPLE, f"{REF_MJ}/juice_wordcount")
+               if not os.path.isfile(p)]
+    if missing:
+        # nothing to time against; keep the committed comparison
+        print(json.dumps({"reference_binaries": "absent",
+                          "missing": missing}))
+        return
 
     from distributed_system_mapreduce_spark.engine.maple_juice import (
         MapleJuice,
